@@ -418,40 +418,36 @@ BENCH_PRINT_ANCHORS = [
 def _compact_line(detail: dict) -> str:
     """One JSON line under OUTPUT_BUDGET chars: 2-decimal timings for the
     FIXED anchor set (stable round-over-round key set), full map in
-    BENCH_DETAIL.json. If the line ever overflows the stdout budget the
-    cheapest anchors are dropped for that run (same safety valve as the
-    old slowest-first retention; with 2-decimal values the 69-anchor
-    line sits comfortably under it)."""
+    BENCH_DETAIL.json. A line that overflows the stdout budget raises
+    instead of dropping anchors: the printed key set must never shrink
+    silently (with 2-decimal values the 69-anchor line sits comfortably
+    under it; the detail file is written before this runs)."""
     timings = detail["queries"]
     anchors = [n for n in BENCH_PRINT_ANCHORS if n in timings]
-    by_cost = sorted(
-        ((n, timings[n]) for n in anchors), key=lambda kv: -kv[1]
-    )
-    keep = len(by_cost)
-    while keep > 0:
-        payload = {
-            "metric": detail["metric"],
-            "value": detail["value"],
-            "unit": detail["unit"],
-            "queries": {k: round(v, 2) for k, v in sorted(by_cost[:keep])},
-            "n_queries": len(timings),
-            "queries_omitted": len(timings) - keep,
-            "detail": "BENCH_DETAIL.json",
-            "sf": detail["sf"],
-            "write_path": detail["write_path"],
-            "calib": {
-                k: detail["calibration"][k]
-                for k in ("head_sec", "drift")
-                if detail.get("calibration")
-            },
-        }
-        line = json.dumps(payload, separators=(",", ":"))
-        if len(line) <= OUTPUT_BUDGET:
-            return line
-        # drop the ~overflow worth of cheapest entries per iteration
-        keep -= max(1, (len(line) - OUTPUT_BUDGET) // 30)
-    return json.dumps({"metric": detail["metric"], "value": detail["value"],
-                       "unit": detail["unit"], "sf": detail["sf"]})
+    payload = {
+        "metric": detail["metric"],
+        "value": detail["value"],
+        "unit": detail["unit"],
+        "queries": {k: round(timings[k], 2) for k in sorted(anchors)},
+        "n_queries": len(timings),
+        "queries_omitted": len(timings) - len(anchors),
+        "detail": "BENCH_DETAIL.json",
+        "sf": detail["sf"],
+        "write_path": detail["write_path"],
+        "calib": {
+            k: detail["calibration"][k]
+            for k in ("head_sec", "drift")
+            if detail.get("calibration")
+        },
+    }
+    line = json.dumps(payload, separators=(",", ":"))
+    if len(line) > OUTPUT_BUDGET:
+        raise ValueError(
+            f"bench line is {len(line)} chars, over the {OUTPUT_BUDGET}-char "
+            f"stdout budget with {len(anchors)} anchors; shorten the printed "
+            "fields rather than drop anchors"
+        )
+    return line
 
 
 def _bench_streaming_micro(spark, sf_dir: str) -> dict:

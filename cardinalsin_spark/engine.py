@@ -20,6 +20,7 @@ import datetime as _dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 from cardinalsin_spark.adaptive import (
     IndexLifecycleManager,
@@ -32,6 +33,7 @@ from cardinalsin_spark.sources.ingest import (
     normalize_to_metrics,
     register_metrics,
     write_metrics,
+    written_schema,
 )
 
 
@@ -531,7 +533,7 @@ class CardinalSin:
             if denial is not None:
                 raise QuotaExceeded(denial)
         m = normalize_to_metrics(df, ts_col, name_col, value_col, label_cols)
-        write_metrics(m, self.metrics_path)
+        granularity = write_metrics(m, self.metrics_path)
         import os
 
         if snapshot or os.path.isdir(os.path.join(self.metrics_path, "_snapshots")):
@@ -542,7 +544,11 @@ class CardinalSin:
             # manifest log, EVERY ingest registers — register_metrics
             # routes reads through the head manifest from then on, so an
             # uncommitted write would be invisible to the engine's view.
-            self.snapshot_catalog().commit_new_files()
+            # The schema written rides along: the manifest stores it, and
+            # register_metrics then reads no footer.
+            self.snapshot_catalog().commit_new_files(
+                schema=written_schema(m, granularity)
+            )
         self.metrics = register_metrics(
             self.spark, self.metrics_path, self.view_name
         )
@@ -1951,17 +1957,14 @@ class CardinalSin:
         # walk stopped, which for a cascade tier stale at its own parent
         # link is still the first node
         if rb is not None:
-            try:
-                # a vacuumed base manifest (rb older than the retention
-                # horizon) makes the delta unreadable — treat as
-                # rewrite-shaped and fall back to raw
-                unionable = (
-                    isinstance(rb, int)
-                    and rb < base_head
-                    and not cat.diff(rb, base_head)["removed"]
-                )
-            except FileNotFoundError:
-                unionable = False
+            # a vacuumed base manifest (rb older than the retention
+            # horizon) makes the delta unreadable — treat as
+            # rewrite-shaped and fall back to raw
+            unionable = (
+                isinstance(rb, int)
+                and rb < base_head
+                and not cat.rewritten_since(rb, base_head)
+            )
             if not unionable:
                 return (
                     None,
@@ -2251,14 +2254,11 @@ class CardinalSin:
             # direct sketch over the metrics table (see _serving_state
             # for why `rb is not None`, not the chain walk's direct
             # flag, discriminates direct from cascade)
-            try:
-                unionable = (
-                    isinstance(rb, int)
-                    and rb < base_head
-                    and not cat.diff(rb, base_head)["removed"]
-                )
-            except FileNotFoundError:
-                unionable = False
+            unionable = (
+                isinstance(rb, int)
+                and rb < base_head
+                and not cat.rewritten_since(rb, base_head)
+            )
             if not unionable:
                 return (
                     None,
@@ -2792,11 +2792,16 @@ class CardinalSin:
         typed like the real API. Serialization is inherently driver-side
         (this is the serving edge — the result set, not the corpus)."""
         label_cols = [c for c in df.columns if c not in (ts_col, value_col)]
+        # a collected TIMESTAMP is a naive datetime in the process's time
+        # zone, with ``fold`` set in a repeated hour, so local ``timestamp()``
+        # inverts it exactly; a TIMESTAMP_NTZ is a UTC wall clock
+        ntz = isinstance(df.schema[ts_col].dataType, TimestampNTZType)
         series: dict = {}
         for r in df.collect():
             key = tuple((c, r[c]) for c in label_cols)
-            ts = r[ts_col]
-            epoch = ts.replace(tzinfo=_dt.timezone.utc).timestamp()
+            ts = r[ts_col].replace(tzinfo=_dt.timezone.utc) if ntz else r[ts_col]
+            secs = int(ts.replace(microsecond=0).timestamp())
+            epoch = (secs * 1_000_000 + ts.microsecond) / 1_000_000
             series.setdefault(key, []).append([epoch, str(r[value_col])])
         return [
             {"metric": {k: str(v) for k, v in key}, "values": sorted(vals)}

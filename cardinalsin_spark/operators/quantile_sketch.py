@@ -216,8 +216,9 @@ def refresh_quantile_sketch(
     * incremental (append-only diff) — sketch the CDC delta, sum with
       the current counts of the touched keys only, file-pruned
       ``merge_upsert``;
-    * rebuild — the diff removed files (compaction/retention): counts
-      cannot be subtracted, re-sketch the head.
+    * rebuild — the diff removed files (compaction/retention), or
+      ``vacuum`` dropped the last fold point's manifest: counts cannot be
+      subtracted, re-sketch the head.
 
     ``transform`` follows ``refresh_rollup``'s completeness covenant
     (ADVICE r12): the manifest records ``rollup_complete`` — True when
@@ -378,9 +379,9 @@ def refresh_quantile_sketch(
         sticky_null_slot = extra["sketch_null_slot"] and bool(
             man.get("sketch_null_slot", False)
         )
-        diff = base.diff(last, base_head)
-        if last is None or diff["removed"]:
-            # rewrite-shaped base commit: counts cannot be subtracted
+        if base.rewritten_since(last, base_head):
+            # rewrite-shaped base commit, or a fold point vacuum dropped:
+            # counts cannot be subtracted
             return sk._rewrite_and_commit(
                 _sketch(base.read(spark, base_head)), head, target_files,
                 "bucket", extra=extra,

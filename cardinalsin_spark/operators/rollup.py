@@ -151,7 +151,8 @@ def refresh_rollup(
       and ``merge_upsert`` with file pruning, so an append touching one
       hot bucket rewrites one rollup file, not the rollup;
     * rebuild — the base diff REMOVED files (compaction, merge,
-      retention): moments cannot be subtracted, so the rollup rewrites
+      retention), or ``vacuum`` dropped the manifest of the last fold
+      point: moments cannot be subtracted, so the rollup rewrites
       from the new base head (the same answer an invalidation-region
       engine converges to, paid only on rewrite-shaped base commits —
       plain appends, the 100 TB steady state, stay incremental).
@@ -340,9 +341,9 @@ def refresh_rollup(
         sticky_values_exact = bool(
             man.get("rollup_values_integer_exact", False)
         )
-        diff = base.diff(last, base_head)
-        if last is None or diff["removed"]:
-            # rewrite-shaped base commit: moments cannot be subtracted
+        if base.rewritten_since(last, base_head):
+            # rewrite-shaped base commit, or a fold point vacuum dropped:
+            # moments cannot be subtracted
             full = _downsample(base.read(spark, base_head))
             return ru._rewrite_and_commit(
                 full, head, target_files, "bucket", extra=_extra_full()

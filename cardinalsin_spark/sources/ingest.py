@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, IntegerType, StructField, StructType
 
 from cardinalsin_spark.schema import metrics_schema
 
@@ -91,6 +92,18 @@ def normalize_to_metrics(
     return out.select(*selected)
 
 
+def is_local(df: DataFrame) -> bool:
+    """True when every leaf of the frame's analyzed plan is a local
+    relation: its rows derive from rows the driver holds, with no scan.
+    (Asking the optimizer, which folds such a plan into one local
+    relation, would evaluate every row once more before the write.)"""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        if leaves.next().getClass().getSimpleName() != "LocalRelation":
+            return False
+    return True
+
+
 def write_metrics(
     df: DataFrame,
     path: str,
@@ -120,9 +133,13 @@ def write_metrics(
     ``repartition(part_cols)`` puts each Hive partition's rows in one task
     (one file per partition per write — no small-file explosion at scale;
     at 100 TB you'd raise ``target_partitions`` so tasks stay
-    executor-sized). ``max_records_per_file`` caps file size WITHOUT an
-    extra shuffle — the writer rolls to a new (still timestamp-sorted)
-    file at the cap: rows_per_file ≈ target_bytes / avg_encoded_row_size.
+    executor-sized). A frame computed from local relations only — a
+    decoded remote-write batch — is already on the driver, so it skips
+    that shuffle: ``coalesce(1)`` and a sort on the partition
+    columns write it in one job with the same one file per partition.
+    ``max_records_per_file`` caps file size WITHOUT an extra shuffle —
+    the writer rolls to a new (still timestamp-sorted) file at the cap:
+    rows_per_file ≈ target_bytes / avg_encoded_row_size.
     """
     if granularity not in ("hour", "date", "auto"):
         raise ValueError(f"granularity must be hour|date|auto, got {granularity!r}")
@@ -141,17 +158,31 @@ def write_metrics(
         out = out.drop("hour")
     if target_partitions:
         out = out.repartition(target_partitions, *part_cols)
+        out = out.sortWithinPartitions("timestamp")
+    elif is_local(out):
+        # rows already on the driver: one task, so one job and no shuffle;
+        # the sort on the partition columns gives each Hive partition one
+        # file, rows in arrival order. That is the layout the shuffle arm
+        # writes too: Spark's planned write re-sorts it by the partition
+        # columns, which drops its timestamp sort.
+        out = out.coalesce(1).sortWithinPartitions(*part_cols)
     else:
-        out = out.repartition(*part_cols)
-    writer = (
-        out.sortWithinPartitions("timestamp")
-        .write.mode(mode)
-        .option("compression", "zstd")
-    )
+        out = out.repartition(*part_cols).sortWithinPartitions("timestamp")
+    writer = out.write.mode(mode).option("compression", "zstd")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.partitionBy(*part_cols).parquet(path)
     return granularity
+
+
+def written_schema(df: DataFrame, granularity: str) -> StructType:
+    """The schema a read of ``write_metrics(df, granularity=...)``'s files
+    reports: the frame's columns, then the Hive partition columns."""
+    fields = [f for f in df.schema.fields if f.name not in ("date", "hour")]
+    fields.append(StructField("date", DateType()))
+    if granularity == "hour":
+        fields.append(StructField("hour", IntegerType()))
+    return StructType(fields)
 
 
 def split_by_time(
@@ -192,14 +223,12 @@ def register_metrics(
     when nothing has been written yet — reference EmptyTable fallback,
     ``query/engine.rs:189-205``: `FROM metrics` must never error).
 
-    ``mergeSchema`` makes registration schema-evolution-safe: a label
-    column added by a later ingest is visible across old and new files
-    (null where absent) instead of silently disappearing depending on
-    which file Spark samples — the reference re-infers schema per
-    registration (``query/engine.rs:171-177``) and flushes on schema
-    change (``ingester/mod.rs:588-630``). Cost: one footer read per file
-    at registration; at catalog scale you'd persist the merged schema in
-    a metastore and pass it explicitly instead.
+    Registration is schema-evolution-safe: a label column added by a
+    later ingest is visible across old and new files (null where absent)
+    instead of silently disappearing depending on which file Spark
+    samples — the reference re-infers schema per registration
+    (``query/engine.rs:171-177``) and flushes on schema change
+    (``ingester/mod.rs:588-630``).
 
     Snapshot routing: once the table carries a manifest log
     (``<path>/_snapshots`` — i.e. the engine ingested with
@@ -209,7 +238,12 @@ def register_metrics(
     (``metadata/s3.rs``): after a compaction the manifest references only
     the rewritten ``_data-v*`` files, and after a ``vacuum`` the original
     files may be gone entirely — a root listing would miss the former and
-    read a shrunken table after the latter."""
+    read a shrunken table after the latter. The head manifest of an
+    engine ingest or a ``compact`` stores the merged schema (see
+    ``sources/snapshots.py``), so registration reads no footer and starts
+    no Spark job; a manifest without one, and a table without a manifest
+    log, infer the schema with ``mergeSchema`` — one footer read per
+    file, cached per dataset version."""
     import os as _os
 
     snap_dir = _os.path.join(path, "_snapshots") if path else ""

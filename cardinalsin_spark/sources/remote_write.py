@@ -22,13 +22,18 @@ schema −53) histograms decode to the classic cumulative per-``le`` row
 shape instead (their bounds are explicit, the wire twin of a classic
 histogram); out-of-spec schemas loud-reject rather than decode wrongly.
 
-Decode runs in ``mapInPandas`` (Arrow-batched, streamed) because protobuf
-bytes are opaque to Catalyst. This is the documented slow path: one Python
-pass at ingest, after which everything is columnar. On a JVM-library
-deployment you would swap this for ``from_protobuf`` with a descriptor set
-— same output contract. Payloads may be snappy-compressed (the protocol
-default); decompression is attempted when the ``snappy``/``cramjam``
-modules exist, else raw protobuf is assumed.
+Decode runs where the payloads already are, because protobuf bytes are
+opaque to Catalyst. A request the caller holds in driver memory — a frame
+built by ``spark.createDataFrame`` from a list, a pandas frame or an Arrow
+table, as every HTTP-door request is — is collected once and decoded on
+the driver into an Arrow table, which becomes a local relation: one Python
+pass, and no later action decodes again. Distributed payload frames (files,
+streams) decode in ``mapInPandas`` (Arrow-batched, streamed) with the same
+per-payload body, so both paths return the same rows. On a JVM-library
+deployment you would swap the decoder for ``from_protobuf`` with a
+descriptor set — same output contract. Payloads may be snappy-compressed
+(the protocol default); decompression is attempted when the
+``snappy``/``cramjam`` modules exist, else raw protobuf is assumed.
 """
 
 from __future__ import annotations
@@ -786,6 +791,11 @@ def remote_write_flatten(
     (ts=CT, 0.0) row — pass ``keep_injected_flag=True`` and commit
     through :func:`append_ct_idempotent` for store-level idempotence
     (or run the engine's dual-write dedup on read).
+
+    Where the decode runs: payloads already in driver memory (see
+    :func:`_driver_resident`) are collected and decoded here, eagerly,
+    into a local relation, so ``on_error="raise"`` raises from this call.
+    Distributed payload frames decode lazily in ``mapInPandas``.
     """
     if on_error not in ("skip", "raise"):
         raise ValueError(f"on_error must be 'skip' or 'raise', got {on_error!r}")
@@ -799,73 +809,149 @@ def remote_write_flatten(
             "is no injected-row flag without CT-zero injection)"
         )
     acc = payloads.sparkSession.sparkContext.accumulator(0)
-    # created_zero rows carry an internal injected flag through the
-    # decode so the cross-payload dedup touches exactly those rows
-    schema = (
-        FLAT_SCHEMA + ", _ct_injected boolean" if created_zero else FLAT_SCHEMA
-    )
+    if _driver_resident(payloads):
+        raw = (r[0] for r in payloads.select(bytes_col).collect())
+        rows = _decode_payloads(raw, version, created_zero, on_error, acc)
+        flat = payloads.sparkSession.createDataFrame(_flat_table(rows, created_zero))
+    else:
+        # created_zero rows carry an internal injected flag through the
+        # decode so the cross-payload dedup touches exactly those rows
+        schema = (
+            FLAT_SCHEMA + ", _ct_injected boolean" if created_zero else FLAT_SCHEMA
+        )
+        cols = _FLAT_COLS + (["_ct_injected"] if created_zero else [])
 
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+        def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+            import pandas as pd
 
-        for pdf in batches:
-            rows: list[tuple] = []
+            for pdf in batches:
+                rows = _decode_payloads(
+                    pdf[bytes_col], version, created_zero, on_error, acc
+                )
+                yield pd.DataFrame(rows, columns=cols)
 
-            def _v2(raw: bytes) -> None:
-                if created_zero:
-                    r2, inj = _decode_write_request_v2_tracked(raw, True)
-                    rows.extend(
-                        (*t, i in inj) for i, t in enumerate(r2)
-                    )
-                else:
-                    rows.extend(decode_write_request_v2(raw))
-
-            def _v1(raw: bytes) -> None:
-                decoded = decode_write_request(raw)
-                if created_zero:
-                    rows.extend((*t, False) for t in decoded)
-                else:
-                    rows.extend(decoded)
-
-            for payload in pdf[bytes_col]:
-                try:
-                    raw = bytes(payload)
-                    if version == 2:
-                        _v2(raw)
-                    elif version == "auto":
-                        if _looks_like_v2(_maybe_decompress(raw)):
-                            _v2(raw)
-                        else:
-                            _v1(raw)
-                    else:
-                        _v1(raw)
-                except (ValueError, UnicodeDecodeError, struct.error, IndexError):
-                    if on_error == "raise":
-                        raise
-                    acc.add(1)
-            cols = ["ts_ms", "metric_name", "value", "labels"]
-            if created_zero:
-                cols.append("_ct_injected")
-            yield pd.DataFrame(rows, columns=cols)
-
-    flat = payloads.select(bytes_col).mapInPandas(fn, schema)
+        flat = payloads.select(bytes_col).mapInPandas(fn, schema)
     if not created_zero:
         return flat
+    injected = F.col("_ct_injected")
     # canonical label key: maps aren't orderable, sorted entries are
     lk = F.to_json(F.array_sort(F.map_entries("labels")))
-    inj = (
-        flat.filter(F.col("_ct_injected"))
-        .withColumn("_lk", lk)
-        .dropDuplicates(["ts_ms", "metric_name", "_lk"])
-        .drop("_lk")
-    )
-    out = flat.filter(~F.col("_ct_injected")).unionByName(inj)
+    key = ["ts_ms", "metric_name", "_lk"]
+    if flat.isStreaming:
+        # the dedup state must hold injected rows only, so they dedupe in
+        # a branch of their own (each branch runs the decode)
+        inj = flat.filter(injected).withColumn("_lk", lk).dropDuplicates(key)
+        out = flat.filter(~injected).unionByName(inj.drop("_lk"))
+    else:
+        # one decode pass: every real row gets a key of its own (a row id
+        # never parses as the JSON label key), so only injected rows merge
+        own = F.monotonically_increasing_id().cast("string")
+        out = (
+            flat.withColumn("_lk", F.when(injected, lk).otherwise(own))
+            .dropDuplicates(key)
+            .drop("_lk")
+        )
     if keep_injected_flag:
         # the flag travels to the sink so append_ct_idempotent can make
         # the injected rows idempotent against the COMMITTED store too
         # (this dedup only covers payloads flattened in one call)
         return out
     return out.drop("_ct_injected")
+
+
+_FLAT_COLS = ["ts_ms", "metric_name", "value", "labels"]
+_MAX_LINEAGE = 32  # createDataFrame(list) builds four RDDs
+_DECODE_ERRORS = (ValueError, UnicodeDecodeError, struct.error, IndexError)
+
+
+def _decode_payloads(payloads, version, created_zero: bool, on_error: str, acc) -> list[tuple]:
+    """Flat rows of every payload, in order — the one per-payload body of
+    both decode paths. With ``created_zero`` each row carries a fifth
+    field, True on injected CT-zero rows. A payload that fails to decode
+    raises under ``on_error="raise"``, else it is skipped and counted in
+    ``acc``."""
+    rows: list[tuple] = []
+
+    def _v2(raw: bytes) -> None:
+        if created_zero:
+            r2, inj = _decode_write_request_v2_tracked(raw, True)
+            rows.extend((*t, i in inj) for i, t in enumerate(r2))
+        else:
+            rows.extend(decode_write_request_v2(raw))
+
+    def _v1(raw: bytes) -> None:
+        decoded = decode_write_request(raw)
+        if created_zero:
+            rows.extend((*t, False) for t in decoded)
+        else:
+            rows.extend(decoded)
+
+    for payload in payloads:
+        try:
+            raw = bytes(payload)
+            if version == 2:
+                _v2(raw)
+            elif version == "auto":
+                if _looks_like_v2(_maybe_decompress(raw)):
+                    _v2(raw)
+                else:
+                    _v1(raw)
+            else:
+                _v1(raw)
+        except _DECODE_ERRORS:
+            if on_error == "raise":
+                raise
+            acc.add(1)
+    return rows
+
+
+def _flat_table(rows: list[tuple], with_flag: bool):
+    """Flat rows as an Arrow table of ``FLAT_SCHEMA`` (plus the injected
+    flag). NaN values become null, as the Arrow conversion of the
+    ``mapInPandas`` path makes them."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * 5
+    arrays = [
+        pa.array(cols[0], pa.int64()),
+        pa.array(cols[1], pa.string()),
+        pa.array(cols[2], pa.float64(), from_pandas=True),
+        pa.array(cols[3], pa.map_(pa.string(), pa.string())),
+    ]
+    names = list(_FLAT_COLS)
+    if with_flag:
+        arrays.append(pa.array(cols[4], pa.bool_()))
+        names.append("_ct_injected")
+    return pa.Table.from_arrays(arrays, names=names)
+
+
+def _driver_resident(df: DataFrame) -> bool:
+    """True when the frame's rows already sit in driver memory: its
+    analyzed plan is a local relation, or an RDD relation whose lineage
+    ends only in parallel collections (what ``spark.createDataFrame``
+    builds from a Python list). Streaming and file-backed frames are
+    distributed. The lineage is walked through ``dependencies()``, at most
+    ``_MAX_LINEAGE`` RDDs deep."""
+    if df.isStreaming:
+        return False
+    plan = df._jdf.queryExecution().analyzed()
+    kind = plan.getClass().getSimpleName()
+    if kind == "LocalRelation":
+        return True
+    if kind != "LogicalRDD":
+        return False
+    stack = [plan.rdd()]
+    for _ in range(_MAX_LINEAGE):
+        if not stack:
+            return True
+        rdd = stack.pop()
+        deps = rdd.dependencies().iterator()
+        if not deps.hasNext():
+            if rdd.getClass().getSimpleName() != "ParallelCollectionRDD":
+                return False
+        while deps.hasNext():
+            stack.append(deps.next().rdd())
+    return not stack
 
 
 def remote_write_to_metrics(

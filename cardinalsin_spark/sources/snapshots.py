@@ -24,6 +24,15 @@ The Spark-idiomatic equivalent is a Delta-style versioned manifest log:
   window. A reader pinned to version N therefore keeps a consistent view
   while any number of compactions commit N+1, N+2, …
 
+A manifest may also store the table's schema (``"schema"``: column name →
+type name, every column nullable) — the ``metaData.schemaString`` action
+of Delta's log. The engine's ingest commits the schema it wrote,
+merged with the head's (a new label column widens it), and ``compact``
+the schema of the frame it rewrote; a read then takes the schema from the
+manifest and starts no footer job. Every other commit (``append``,
+``init_from_directory``, ``merge_upsert``, the stream sink) stores none,
+and a read of such a manifest infers the schema from the footers.
+
 Scale posture: manifests are metadata (one JSON entry per data file), all
 manifest I/O is driver-side and catalog-sized; the data itself moves only
 through ordinary distributed parquet read/write. A 100M-file table would
@@ -40,6 +49,21 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DateType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 
 class SnapshotConflict(Exception):
@@ -229,13 +253,58 @@ def _partition_keys_of(root: str, path: str) -> tuple[str, ...]:
     return tuple(keys)
 
 
+# types whose parquet round trip reads back as written, so a stored schema
+# of them equals what footer inference reports
+_STORABLE_TYPES = {
+    t.typeName(): t
+    for t in (
+        StringType(), LongType(), IntegerType(), ShortType(), ByteType(),
+        DoubleType(), FloatType(), BooleanType(), TimestampType(),
+        DateType(), BinaryType(),
+    )
+}
+
+
+def _storable_schema(schema: StructType) -> dict[str, str] | None:
+    """``schema`` as a manifest stores it: column name → type name, in
+    order; every column reads back nullable, as a parquet read reports
+    it. None when a column's type might read back differently (nested,
+    decimal, timestamp_ntz)."""
+    out = {f.name: f.dataType.typeName() for f in schema.fields}
+    if any(t not in _STORABLE_TYPES for t in out.values()):
+        return None
+    return out
+
+
+def _stored_struct(stored: dict[str, str]) -> StructType:
+    return StructType(
+        [StructField(name, _STORABLE_TYPES[t]) for name, t in stored.items()]
+    )
+
+
+def _merge_stored_schemas(
+    base: dict[str, str], new: dict[str, str]
+) -> dict[str, str] | None:
+    """``base`` widened by the columns of ``new`` it lacks, in order. None
+    when a column changes type (or only its case), which leaves the
+    manifest to footer inference."""
+    out = dict(base)
+    by_lower = {name.lower(): name for name in base}
+    for name, t in new.items():
+        old = by_lower.setdefault(name.lower(), name)
+        if old != name or out.setdefault(name, t) != t:
+            return None
+    return out
+
+
 # schema cache for manifest file-group reads — see the comment inside
 # read_parquet_grouped (metadata only; data is always read fresh)
 _GROUP_SCHEMA_CACHE: dict[tuple, object] = {}
 
 
 def read_parquet_grouped(
-    spark: SparkSession, root: str, paths: list[str]
+    spark: SparkSession, root: str, paths: list[str],
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Read an explicit parquet file list with Hive partition columns
     intact. Files are grouped by partition layout; each group reads with
@@ -243,8 +312,9 @@ def read_parquet_grouped(
     (a bare ``spark.read.parquet(*files)`` silently drops them), and
     groups are aligned with ``unionByName`` — Spark refuses mixed flat +
     Hive layouts in one read (CONFLICTING_DIRECTORY_STRUCTURES).
-    ``mergeSchema`` keeps label-evolution semantics identical to a root
-    directory read."""
+    ``schema`` (partition columns included) is every group's read schema
+    when the caller knows it; without it ``mergeSchema`` keeps
+    label-evolution semantics identical to a root directory read."""
     if not paths:
         raise ValueError("read_parquet_grouped: empty file list")
     groups: dict[tuple[str, ...], list[str]] = {}
@@ -256,6 +326,9 @@ def read_parquet_grouped(
         if key:
             reader = reader.option("basePath", root)
         files = sorted(groups[key])
+        if schema is not None:
+            frames.append(reader.schema(schema).parquet(*files))
+            continue
         # merged-schema inference cached per (session, file group): the
         # files a manifest references are content-addressed and never
         # rewritten in place (mtimes included defensively for small
@@ -441,14 +514,19 @@ class SnapshotCatalog:
         their own group; groups are aligned with ``unionByName`` (Spark
         refuses mixed layouts in one read: CONFLICTING_DIRECTORY_STRUCTURES).
         ``mergeSchema`` keeps label-evolution semantics identical to the
-        engine's root-read registration (``ingest.register_metrics``)."""
-        paths = self.files(version)
-        if not paths:
-            raise ValueError(
-                f"snapshot {version if version is not None else self.current_version()}"
-                " references no data files"
-            )
-        return read_parquet_grouped(spark, self.root, paths)
+        engine's root-read registration (``ingest.register_metrics``).
+        A manifest that stores its schema reads with it instead, so no
+        footer is read."""
+        m = self.manifest(version)
+        if not m["files"]:
+            raise ValueError(f"snapshot {m['version']} references no data files")
+        stored = m.get("schema")
+        return read_parquet_grouped(
+            spark,
+            self.root,
+            [os.path.join(self.root, p) for p in m["files"]],
+            _stored_struct(stored) if stored else None,
+        )
 
     def version_as_of(self, ts_ns: int) -> int:
         """Time travel: the latest version committed at or before
@@ -484,6 +562,14 @@ class SnapshotCatalog:
             "added": sorted(new - old),
             "removed": sorted(old - new),
         }
+
+    def rewritten_since(self, v_from: int | None, v_to: int | None = None) -> bool:
+        """True unless ``v_from`` → ``v_to`` provably only added files: the
+        diff removed a file, ``v_from`` is None, or its manifest is gone
+        (``vacuum`` dropped it), so nothing proves what it held."""
+        if v_from is None or v_from not in self.versions():
+            return True
+        return bool(self.diff(v_from, v_to)["removed"])
 
     def read_changes(
         self, spark: SparkSession, v_from: int | None, v_to: int | None = None
@@ -527,10 +613,14 @@ class SnapshotCatalog:
 
         return self._retrying(_attempt, retries)
 
-    def commit_new_files(self, retries: int = 5) -> int:
-        return self._retrying(self._commit_new_files_once, retries)
+    def commit_new_files(
+        self, retries: int = 5, schema: StructType | None = None
+    ) -> int:
+        return self._retrying(
+            lambda: self._commit_new_files_once(schema), retries
+        )
 
-    def _commit_new_files_once(self) -> int:
+    def _commit_new_files_once(self, schema: StructType | None = None) -> int:
         """Post-ingest catalog registration (the reference's upload →
         catalog-register sequence, ``metadata/s3.rs:86-127``): diff the
         table directory against the head manifest and append any data
@@ -539,17 +629,55 @@ class SnapshotCatalog:
         they are NOT resurrected; only genuinely new paths are added.
         Compaction output lives under ``_data-v*`` which the directory walk
         skips, so an orphaned compaction (crash before commit) can never be
-        mistaken for new data."""
+        mistaken for new data.
+
+        ``schema`` is the schema the new files were written with,
+        partition columns included. The commit stores it merged with the
+        head's stored schema — unless the head stores none, a type
+        changed, or a new file's footer names a column it lacks (a file
+        another writer landed), which leave the new head to footer
+        inference."""
         listed = set(self._list_parquet(self.root))
-        head = self.current_version()
+        manifests = {v: self.manifest(v) for v in self.versions()}
+        head = max(manifests, default=None)
         known: set[str] = set()
-        for v in self.versions():
-            known.update(self.files(v))
+        for m in manifests.values():
+            known.update(os.path.join(self.root, p) for p in m["files"])
         new = sorted(listed - known)
         if not new:
             return head if head is not None else self.commit([], None)
-        current = self.files(head) if head is not None else []
-        return self.commit(current + new, head)
+        head_m = manifests.get(head)
+        current = (
+            [os.path.join(self.root, p) for p in head_m["files"]] if head_m else []
+        )
+        stored = (
+            self._new_files_schema(schema, head_m, new)
+            if schema is not None
+            else None
+        )
+        extra = {"schema": stored} if stored else None
+        return self.commit(current + new, head, extra=extra)
+
+    def _new_files_schema(
+        self, schema: StructType, head_m: dict | None, new: list[str]
+    ) -> dict | None:
+        """The schema a commit of ``new`` files written with ``schema``
+        stores, or None (see ``_commit_new_files_once``). The coverage
+        check reads only the new files' footers, on the driver."""
+        import pyarrow.parquet as pq
+
+        stored = _storable_schema(schema)
+        if stored is not None and head_m and head_m["files"]:
+            base = head_m.get("schema")
+            stored = _merge_stored_schemas(base, stored) if base else None
+        if stored is None:
+            return None
+        names = {name.lower() for name in stored}
+        for path in new:
+            cols = [*pq.read_schema(path).names, *self._partition_keys(path)]
+            if any(c.lower() not in names for c in cols):
+                return None
+        return stored
 
     def compact(
         self,
@@ -578,9 +706,12 @@ class SnapshotCatalog:
             head = self.current_version()
             if head is None:
                 raise FileNotFoundError("nothing to compact: no snapshots")
+            df = self.read(spark, head)
+            # the rewrite carries no file over, so its schema is the table's
+            stored = _storable_schema(df.schema)
             return self._rewrite_and_commit(
-                self.read(spark, head), head, target_files, ts_col,
-                extra=extra,
+                df, head, target_files, ts_col,
+                extra={**(extra or {}), "schema": stored} if stored else extra,
             )
 
         return self._retrying(_attempt, retries)

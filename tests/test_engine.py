@@ -169,6 +169,57 @@ def test_prometheus_matrix_shape(spark, engine):
         assert all(isinstance(v, str) for _, v in entry["values"])
 
 
+_MATRIX_UNDER_TZ = """
+import json, time
+from pyspark.sql import SparkSession, functions as F
+from cardinalsin_spark.engine import CardinalSin
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .getOrCreate()
+)
+df = spark.createDataFrame(
+    [(us, float(i)) for i, us in enumerate(MICROS)], "us long, value double"
+).select(
+    F.timestamp_micros("us").alias("time_bucket"),
+    F.lit("m").alias("metric_name"),
+    "value",
+)
+body = CardinalSin.to_prometheus_matrix(df)
+print(json.dumps([time.tzname, [t for t, _ in body[0]["values"]]]))
+"""
+
+
+def test_prometheus_matrix_epochs_exact_under_local_tz():
+    """Matrix epochs are the instants, whatever the process time zone: a
+    collected timestamp is a naive local datetime, which read as UTC
+    shifted 1970-01-01T01:00Z to -14400.0 under America/New_York. The
+    two 01:30 wall-clock instants of the 2024-11-03 fall-back hour keep
+    their own epochs."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    # 01:00Z; 01:30 EDT; 01:30:00.25 EST
+    micros = [3_600_000_000, 1_730_611_800_000_000, 1_730_615_400_250_000]
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _MATRIX_UNDER_TZ.replace("MICROS", repr(micros))],
+        cwd=repo,
+        env={**os.environ, "TZ": "America/New_York", "PYTHONPATH": repo},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    tzname, epochs = json.loads(out.stdout.strip().splitlines()[-1])
+    assert "EST" in tzname
+    assert epochs == [us / 1_000_000 for us in micros]
+
+
 def test_tenant_rate_limiting_on_queries(engine):
     """sql/promql with a tenant_id are gated once rate limiting is on;
     denials surface as QuotaExceeded carrying the retry hint."""

@@ -284,6 +284,23 @@ def test_bench_printed_key_set_is_fixed():
     assert len(line2) <= bench.OUTPUT_BUDGET
 
 
+def test_bench_line_overflow_raises_instead_of_dropping_anchors():
+    """ADVICE bench.py:430: a line over the stdout budget must fail
+    loudly; trimming anchors would silently shrink the fixed key set."""
+    import pytest
+
+    import bench
+
+    detail = {
+        "metric": "total_query_sec", "value": 1.0, "unit": "sec", "sf": 0.1,
+        "queries": {n: 1.0 for n in bench.BENCH_PRINT_ANCHORS},
+        "write_path": {"rows": 1, "note": "x" * bench.OUTPUT_BUDGET},
+        "calibration": {"head_sec": 0.82, "drift": 0.99},
+    }
+    with pytest.raises(ValueError, match="budget"):
+        bench._compact_line(detail)
+
+
 def test_registry_rotation_age_and_size():
     """VERDICT r13 item 7: the registry sits at the 4-round/50-slot cycle
     limit. Two invariants keep the rotation honest: (1) no row may be

@@ -2866,3 +2866,46 @@ def test_having_union_frame_refused(spark, tmp_path):
     assert not any("ru300" in f for f in pc.inputFiles())
     raw_pc = raw_eng.promql_range("sum(s0) > 9000", start, end, 600)
     assert pc.collect() == raw_pc.collect()
+
+
+def test_refresh_after_vacuum_dropped_the_fold_point(spark, tmp_path):
+    """``vacuum`` can drop the manifest of a rollup's (and a sketch's)
+    last fold point: ingest → refresh → compact → ingest → vacuum. The
+    next refresh must take the rebuild arm instead of raising
+    FileNotFoundError from the base diff, and equal a bootstrap of the
+    same head bit for bit."""
+    from cardinalsin_spark.engine import CardinalSin
+    from cardinalsin_spark.sources.snapshots import SnapshotCatalog
+
+    cs = CardinalSin(spark, str(tmp_path / "metrics"), view_name="m_vacuumed")
+
+    def ingest(lo, hi):
+        cs.ingest(
+            spark.range(lo, hi).select(
+                F.timestamp_seconds(F.lit(START) + F.col("id") * 30).alias("ts"),
+                F.concat(F.lit("m"), (F.col("id") % 2).cast("string")).alias("name"),
+                ((F.col("id") * 37) % 1000).cast("double").alias("v"),
+            ),
+            "ts", "name", "v", snapshot=True,
+        )
+
+    def refresh(tag):
+        ru, sk = str(tmp_path / f"ru_{tag}"), str(tmp_path / f"sk_{tag}")
+        cs.refresh_rollup(ru, 3600)
+        cs.refresh_quantile_sketch(sk, 3600)
+        return ru, sk
+
+    ingest(0, 300)
+    ru, sk = refresh("live")
+    cat = cs.snapshot_catalog()
+    cat.compact(spark)
+    ingest(300, 600)
+    cat.vacuum()
+    assert SnapshotCatalog(ru).manifest()["rollup_base_version"] not in cat.versions()
+    refresh("live")
+    ru_boot, sk_boot = refresh("boot")
+    head = cat.current_version()
+    for live, boot in ((ru, ru_boot), (sk, sk_boot)):
+        got, want = SnapshotCatalog(live), SnapshotCatalog(boot)
+        assert got.manifest()["rollup_base_version"] == head
+        assert _rows_all(got.read(spark)) == _rows_all(want.read(spark))
